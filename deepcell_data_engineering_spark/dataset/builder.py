@@ -47,6 +47,7 @@ from deepcell_data_engineering_spark.sources.codecs import (
     encode_x,
     encode_y,
 )
+from deepcell_data_engineering_spark.session import local_frame
 from deepcell_data_engineering_spark.sources.images import IMAGES_SCHEMA
 
 DATASET_SCHEMA = StructType(
@@ -305,7 +306,8 @@ def balance_dataset(
         )
         spark = df.sparkSession
         cat_dim = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(r[category], int(r["__n"])) for r in stats],
                 f"{category} {df.schema[category].dataType.simpleString()}, __n long",
             )
@@ -350,7 +352,7 @@ def balance_dataset(
         for copy, local in enumerate(chosen):
             rows.append((int(members[local]), copy))
 
-    assign = df.sparkSession.createDataFrame(rows, schema="img_idx BIGINT, copy INT")
+    assign = local_frame(df.sparkSession, rows, "img_idx BIGINT, copy INT")
     return df.drop("copy").join(F.broadcast(assign), on="img_idx", how="inner")
 
 
@@ -457,7 +459,7 @@ def build_dataset(
         if split_counts.get(split, 0) == 0:
             # empty frame with the SAME post-reshape schema as the other
             # splits, so unionByName across splits always works
-            out[split] = df.sparkSession.createDataFrame([], DATASET_SCHEMA)
+            out[split] = local_frame(df.sparkSession, [], DATASET_SCHEMA)
             continue
         part = subset_dataset(part, tissues=tissues, platforms=platforms)
         part = reshape_dataset(part, shape, resize=resize)

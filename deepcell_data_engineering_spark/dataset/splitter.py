@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from deepcell_data_engineering_spark.operators.ranking import global_dense_rank
+from deepcell_data_engineering_spark.session import local_frame
 
 
 def _hash_ranked(df: DataFrame, seed: int) -> DataFrame:
@@ -49,7 +50,7 @@ def _hash_ranked(df: DataFrame, seed: int) -> DataFrame:
 def _index_assignment_df(df: DataFrame, rows: list[tuple[int, int, str]]):
     """(img_idx, copy, split) assignment joined back onto the table."""
     spark = df.sparkSession
-    assign = spark.createDataFrame(rows, schema="img_idx BIGINT, copy INT, split STRING")
+    assign = local_frame(spark, rows, "img_idx BIGINT, copy INT, split STRING")
     return df.join(F.broadcast(assign), on="img_idx", how="inner")
 
 
@@ -263,8 +264,11 @@ def per_experiment_split(
             bounds.append(
                 (r[exp_col], sizes["train"], sizes["train"] + sizes["val"])
             )
-        bdf = df.sparkSession.createDataFrame(
-            bounds, schema=[exp_col, "__b1", "__b2"]
+        bdf = local_frame(
+            df.sparkSession,
+            bounds,
+            f"{exp_col} {df.schema[exp_col].dataType.simpleString()}, "
+            "__b1 bigint, __b2 bigint",
         )
         w = Window.partitionBy(exp_col).orderBy(
             F.xxhash64("img_idx", F.lit(0 if seed is None else int(seed))),

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from deepcell_data_engineering_spark.functions.dedup import cosine_expr
+from deepcell_data_engineering_spark.session import local_frame
 
 
 def _as_double(df: DataFrame, vec_col: str) -> DataFrame:
@@ -238,9 +239,10 @@ def kmeans_fit(
                 " as int) as centroid_id",
             )
         else:
-            c_df = v.sparkSession.createDataFrame(
+            c_df = local_frame(
+                v.sparkSession,
                 [(i, c) for i, c in enumerate(centroids)],
-                schema="centroid_id INT, vcent ARRAY<DOUBLE>",
+                "centroid_id INT, vcent ARRAY<DOUBLE>",
             )
             assigned = ivf_assign(
                 v, c_df.withColumnRenamed("centroid_id", id_col)
@@ -271,12 +273,10 @@ def kmeans_fit(
             break
 
     v.unpersist()
-    return df.sparkSession.createDataFrame(
-        [
-            (i, c, counts.get(i, 0))
-            for i, c in enumerate(centroids)
-        ],
-        schema=f"centroid_id INT, {vec_col} ARRAY<DOUBLE>, n_assigned BIGINT",
+    return local_frame(
+        df.sparkSession,
+        [(i, c, counts.get(i, 0)) for i, c in enumerate(centroids)],
+        f"centroid_id INT, {vec_col} ARRAY<DOUBLE>, n_assigned BIGINT",
     )
 
 
@@ -671,7 +671,8 @@ def pq_encode(
         )
     out = None
     for s in range(m):
-        cent = spark.createDataFrame(
+        cent = local_frame(
+            spark,
             [(j, v) for ss, j, v in codebooks if ss == s],
             f"{id_col} long, {vec_col} array<double>",
         )

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from deepcell_data_engineering_spark.session import local_frame
+
 
 def token_count(text: Column) -> Column:
     """Whitespace token count (split on runs of whitespace after trim)."""
@@ -462,8 +464,8 @@ def bpe_train(
                 F.col("seq"), F.lit(f" {a}  {b} "), F.lit(f" {a}{b} ")
             ).alias("seq"),
         )
-    return spark.createDataFrame(
-        merges, "round int, lhs string, rhs string, merged string, pair_count bigint"
+    return local_frame(
+        spark, merges, "round int, lhs string, rhs string, merged string, pair_count bigint"
     )
 
 

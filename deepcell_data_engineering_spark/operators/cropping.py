@@ -43,7 +43,7 @@ from deepcell_data_engineering_spark.sources.codecs import (
     encode_x,
     encode_y,
 )
-from deepcell_data_engineering_spark.sources.images import IMAGES_SCHEMA
+from deepcell_data_engineering_spark.sources.images import IMAGES_SCHEMA, probe_images
 
 
 def compute_crop_indices(
@@ -130,14 +130,6 @@ class CropLog:
         return cls(**json.loads(s))
 
 
-def _uniform_dims(df: DataFrame) -> tuple[int, int]:
-    """All images must share (height, width) — the tensor contract."""
-    dims = df.select("height", "width").distinct().collect()
-    if len(dims) != 1:
-        raise ValueError(f"images must share dimensions; found {len(dims)} distinct (h, w)")
-    return int(dims[0]["height"]), int(dims[0]["width"])
-
-
 def crop_images(
     df: DataFrame,
     crop_size: tuple[int, int] | None = None,
@@ -152,21 +144,19 @@ def crop_images(
     crop_utils.py:104-105). Output: one row per (input row × grid cell),
     with ``crop`` = row-major grid counter and zero-padded edges.
 
-    ``validate=False`` skips the three guard jobs (already-cropped check,
-    uniform-dims distinct, fov-name listing) for composed pipelines that
-    have already validated their input once — the grid then comes from
-    ``dims`` (or a single-row probe) and the log carries no fov names.
+    The guards (un-cropped input, uniform dims, fov-name listing) and the
+    grid's (height, width) come from one aggregate action
+    (``probe_images``). ``validate=False`` drops the guards for composed
+    pipelines that have already validated their input once: the grid then
+    comes from ``dims`` (no job at all) or the probe's max height and
+    width, and the log carries no fov names.
     """
-    if validate:
-        already = df.select(F.countDistinct("crop").alias("n")).collect()[0]["n"]
-        if already > 1:
-            raise ValueError("images have already been cropped")
-        height, width = _uniform_dims(df)
-    elif dims is not None:
-        height, width = dims
+    fov_names: list[str] = []
+    if validate or dims is None:
+        probe = probe_images(df, for_crop=True, for_slice=False, validate=validate)
+        height, width, fov_names = probe.height, probe.width, probe.fov_names
     else:
-        probe = df.select("height", "width").first()
-        height, width = int(probe["height"]), int(probe["width"])
+        height, width = dims
 
     r_starts, r_ends, r_pad = compute_crop_indices(
         height, None if crop_size is None else crop_size[0],
@@ -175,11 +165,6 @@ def crop_images(
         width, None if crop_size is None else crop_size[1],
         None if crop_num is None else crop_num[1], overlap_frac)
 
-    fov_names = (
-        [r["fov"] for r in df.select("fov").distinct().orderBy("fov").collect()]
-        if validate
-        else []
-    )
     log = CropLog(
         row_starts=[int(v) for v in r_starts],
         row_ends=[int(v) for v in r_ends],

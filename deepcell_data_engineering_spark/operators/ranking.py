@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from deepcell_data_engineering_spark.session import local_frame
+
 
 def global_dense_rank(
     df: DataFrame,
@@ -48,8 +50,8 @@ def global_dense_rank(
         return df.withColumn(out_col, F.lit(start).cast("long"))
 
     schema_parts = [f"{c} {df.schema[c].dataType.simpleString()}" for c in pcols]
-    off_df = df.sparkSession.createDataFrame(
-        offsets, ", ".join(schema_parts + ["__p int", "__off long"])
+    off_df = local_frame(
+        df.sparkSession, offsets, ", ".join(schema_parts + ["__p int", "__off long"])
     )
     w = Window.partitionBy(*pcols, "__p").orderBy(*ocols)
     return (

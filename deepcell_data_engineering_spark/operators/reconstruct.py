@@ -26,6 +26,7 @@ from deepcell_data_engineering_spark.operators.slicing import (
     slice_images,
     stitch_slices,
 )
+from deepcell_data_engineering_spark.sources.images import probe_images
 
 
 @dataclass
@@ -64,31 +65,42 @@ def crop_and_slice(
 ) -> tuple[DataFrame, ReconLog]:
     """Forward pipeline (R3 then R6), emitting one merged log.
 
-    Guard jobs run at most once, against the narrow ORIGINAL input: the
-    slice step after a crop never re-validates or re-probes the
-    crop-fanned intermediate (its ``slice``/``stack`` columns are
-    untouched by cropping, and probing post-fan-out rows would cost a
+    ONE aggregate action (``probe_images``) over the narrow ORIGINAL input
+    gives the crop grid's dims, the stack extent and, with ``validate``,
+    every guard (un-cropped, un-sliced, uniform dims) and the fov names.
+    The crop and slice steps then run job-free: the slice step never
+    probes the crop-fanned intermediate (its ``slice``/``stack`` columns
+    are untouched by cropping, and probing post-fan-out rows would cost a
     full fan-out materialization)."""
     log = ReconLog()
+    if crop_size is None and slice_len is None:
+        return images, log
+    probe = probe_images(
+        images,
+        for_crop=crop_size is not None,
+        for_slice=slice_len is not None,
+        validate=validate,
+    )
     out = images
-    stack_len = None
-    if slice_len is not None and crop_size is not None:
-        # probe the stack extent pre-fan-out; one narrow agg job
-        from pyspark.sql import functions as F
-
-        stack_len = images.select(F.max("stack")).collect()[0][0] + 1
     if crop_size is not None:
         out, log.crop = crop_images(
-            out, crop_size=crop_size, overlap_frac=overlap_frac, validate=validate
+            out,
+            crop_size=crop_size,
+            overlap_frac=overlap_frac,
+            validate=False,
+            dims=(probe.height, probe.width),
         )
+        log.crop.fov_names = probe.fov_names
     if slice_len is not None:
         out, log.slice = slice_images(
             out,
             slice_len=slice_len,
             slice_overlap=slice_overlap,
-            validate=validate and crop_size is None,
-            stack_len=stack_len,
+            validate=False,
+            stack_len=probe.stack_len,
         )
+        if crop_size is None:
+            log.slice.fov_names = probe.fov_names
     return out, log
 
 

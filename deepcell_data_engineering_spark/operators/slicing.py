@@ -12,6 +12,10 @@ it), with the within-slice index computed as ``stack - start``. No UDF, no
 payload decode: Catalyst plans a broadcast nested-loop join over a
 handful of slice tuples, and payloads are moved, never interpreted.
 
+The slice dim is built on the driver as an Arrow ``LocalRelation``
+(``session.local_frame``), so it is scanned inside the JVM: Python workers
+run only pixel kernels, and this module runs none.
+
 Stitching back is likewise relational: for each output frame pick the row
 from the highest covering slice (the reference's last-writer-wins order)
 via one row_number window.
@@ -29,6 +33,9 @@ import numpy as np
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from deepcell_data_engineering_spark.session import local_frame
+from deepcell_data_engineering_spark.sources.images import probe_images
 
 
 def compute_slice_indices(
@@ -77,33 +84,30 @@ def slice_images(
     frame index. Frames in overlap regions are duplicated into every
     covering slice — exactly the dense tensor's fan-out, as a join.
 
-    ``validate=False`` skips the guard jobs (already-sliced check,
-    fov-name listing) for composed pipelines; pass ``stack_len`` to also
-    skip the max-stack probe, making plan construction job-free.
+    The guards (un-sliced input, fov-name listing) and the stack extent
+    come from one aggregate action (``probe_images``). ``validate=False``
+    drops the guards for composed pipelines; pass ``stack_len`` as well to
+    make plan construction job-free.
     """
-    if validate:
-        already = df.select(F.countDistinct("slice").alias("n")).collect()[0]["n"]
-        if already > 1:
-            raise ValueError("images have already been sliced")
-    if stack_len is None:
-        stack_len = df.select(F.max("stack")).collect()[0][0] + 1
+    fov_names: list[str] = []
+    if validate or stack_len is None:
+        probe = probe_images(df, for_crop=False, for_slice=True, validate=validate)
+        fov_names = probe.fov_names
+        if stack_len is None:
+            stack_len = probe.stack_len
     starts, ends = compute_slice_indices(stack_len, slice_len, slice_overlap)
     log = SliceLog(
         slice_start_indices=[int(v) for v in starts],
         slice_end_indices=[int(v) for v in ends],
         num_slices=len(starts),
         original_stack_len=int(stack_len),
-        fov_names=(
-            [r["fov"] for r in df.select("fov").distinct().orderBy("fov").collect()]
-            if validate
-            else []
-        ),
+        fov_names=fov_names,
     )
 
-    spark = df.sparkSession
-    slice_dim = spark.createDataFrame(
+    slice_dim = local_frame(
+        df.sparkSession,
         [(int(i), int(s), int(e)) for i, (s, e) in enumerate(zip(starts, ends))],
-        schema="slice_id INT, start INT, end INT",
+        "slice_id INT, start INT, end INT",
     )
     sliced = (
         df.drop("slice")
@@ -125,13 +129,10 @@ def stitch_slices(df: DataFrame, log: SliceLog) -> DataFrame:
     frame back at ``slice_start + within_index``; in overlap regions the
     higher slice index wins (the reference writes slices in ascending
     order, so later writes overwrite). One window, no UDF."""
-    spark = df.sparkSession
-    slice_dim = spark.createDataFrame(
-        [
-            (int(i), int(s))
-            for i, s in enumerate(log.slice_start_indices)
-        ],
-        schema="slice_id INT, start INT",
+    slice_dim = local_frame(
+        df.sparkSession,
+        [(int(i), int(s)) for i, s in enumerate(log.slice_start_indices)],
+        "slice_id INT, start INT",
     )
     placed = (
         df.join(F.broadcast(slice_dim), df["slice"] == slice_dim["slice_id"])

@@ -17,6 +17,7 @@ from deepcell_data_engineering_spark.functions import dedup as dd
 from deepcell_data_engineering_spark.functions import similarity as sim
 from deepcell_data_engineering_spark.functions import text as tx
 from deepcell_data_engineering_spark.relational.queries import _q
+from deepcell_data_engineering_spark.session import local_frame
 
 
 @_q(
@@ -4275,8 +4276,8 @@ def _pq_adc(spark: SparkSession, sf_dir: str, topk: int = 5) -> DataFrame:
     cb = sim.pq_train(emb, m=4, n_clusters=8, iters=2)
     codes = sim.pq_encode(emb, cb)
     sub = len(cb[0][2])
-    cent = spark.createDataFrame(
-        [(s, j, v) for s, j, v in cb], "s int, code long, cvec array<double>"
+    cent = local_frame(
+        spark, [(s, j, v) for s, j, v in cb], "s int, code long, cvec array<double>"
     )
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), "embedding"
@@ -5648,8 +5649,8 @@ def x92(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = sim.pq_train(emb, m=4, n_clusters=8, iters=2)
     codes = sim.pq_encode(emb, cb).withColumnRenamed("vec_id", "neighbor_id")
     sub = len(cb[0][2])
-    cent = spark.createDataFrame(
-        [(s, j, v) for s, j, v in cb], "s int, code long, cvec array<double>"
+    cent = local_frame(
+        spark, [(s, j, v) for s, j, v in cb], "s int, code long, cvec array<double>"
     )
     dot = F.aggregate(
         F.zip_with(
@@ -5962,9 +5963,9 @@ def _x95_oracle(t: float = 0.5) -> str:
     "truth set; candidate stats are counts over vocab-bounded pair "
     "sets, never materialized row-pair scans. window_bounded=1: the "
     "chosen-config global MIN window runs over the 4-row config "
-    "frame (a createDataFrame literal -> RDDScan, opaque to the "
-    "plan prover) joined to a grouped aggregate - constant "
-    "cardinality by construction.",
+    "frame (a LocalRelation literal) joined to a grouped aggregate - "
+    "constant cardinality by construction; the plan prover proves it "
+    "at sf0.001, and the declaration keeps the bound at other scales.",
     window_bounded=1,
 )
 def x95(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6001,7 +6002,7 @@ def x95(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.coalesce(F.col("__t"), F.lit(0))).alias("n_found"),
     )
     # a config can legitimately produce zero candidates - keep its row
-    cfg = spark.createDataFrame(_X95_CONFIGS, "bands int, rows_per_band int")
+    cfg = local_frame(spark, _X95_CONFIGS, "bands int, rows_per_band int")
     full = cfg.join(stats, ["bands", "rows_per_band"], "left").select(
         "bands",
         "rows_per_band",
@@ -6230,8 +6231,8 @@ def x96(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(cdot * F.lit(1e9)).cast("bigint").alias("cdot"),
     )
     sub = len(cb[0][2])
-    cent_rows = spark.createDataFrame(
-        [(s, j, v) for s, j, v in cb], "s int, code long, cvec array<double>"
+    cent_rows = local_frame(
+        spark, [(s, j, v) for s, j, v in cb], "s int, code long, cvec array<double>"
     )
     dot = F.aggregate(
         F.zip_with(
@@ -8731,8 +8732,8 @@ def x127(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((v, r["n_docs"], r["n_sources"], r["sum_chars"]))
     finally:
         shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "version BIGINT, n_docs BIGINT, n_sources BIGINT, sum_chars BIGINT",
     ).orderBy("version")
 
@@ -8848,8 +8849,8 @@ def x128(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows = sorted(pool.map(_roundtrip, sorted(readers)))
     finally:
         shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "fmt STRING, n BIGINT, n_users BIGINT, sum_cents BIGINT, "
         "min_id BIGINT, max_id BIGINT",
     ).orderBy("fmt")
@@ -9123,8 +9124,8 @@ def x132(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "version BIGINT, op STRING, n_docs BIGINT, n_sources BIGINT, "
         "sum_chars BIGINT, compacted BIGINT",
     ).orderBy("version")
@@ -10591,8 +10592,8 @@ def x145(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "lang STRING, n_docs BIGINT, sum_chars BIGINT"
+    return local_frame(
+        spark, rows, "lang STRING, n_docs BIGINT, sum_chars BIGINT"
     ).orderBy("lang")
 
 
@@ -11073,8 +11074,8 @@ def x151(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
+    return local_frame(
+        spark, rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
     ).orderBy("o_orderpriority")
 
 
@@ -11913,8 +11914,8 @@ def x160(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = li.groupBy("f", "v").agg(F.sum("w").alias("wc"))
     cum = grouped_cumsum(hist, ["f"], "v", "wc")
     tot = hist.groupBy("f").agg(F.sum("wc").cast("long").alias("total_w"))
-    pcts = spark.createDataFrame(
-        [("p25", 1, 4), ("p50", 1, 2), ("p75", 3, 4), ("p90", 9, 10)],
+    pcts = local_frame(
+        spark, [("p25", 1, 4), ("p50", 1, 2), ("p75", 3, 4), ("p90", 9, 10)],
         "pct STRING, nu LONG, de LONG",
     )
     # the 12-row frame renames f -> flag BEFORE the join: with the
@@ -12141,8 +12142,8 @@ def x162(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
+    return local_frame(
+        spark, rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
     ).orderBy("o_orderpriority")
 
 
@@ -12346,8 +12347,8 @@ def x164(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(t, ignore_errors=True)
     return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
+        local_frame(
+            spark, rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
         )
         .withColumn("n_dirs_scanned", F.lit(n_kept).cast("bigint"))
         .withColumn("n_dirs_total", F.lit(n_total).cast("bigint"))
@@ -12427,8 +12428,8 @@ def x165(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.catalog.dropTempView("x165_dim")
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "c_mktsegment STRING, n_orders BIGINT, sum_cents BIGINT"
+    return local_frame(
+        spark, rows, "c_mktsegment STRING, n_orders BIGINT, sum_cents BIGINT"
     ).orderBy("c_mktsegment")
 
 
@@ -12554,8 +12555,8 @@ def x166(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(t, ignore_errors=True)
     return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
+        local_frame(
+            spark, rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
         )
         .withColumn(
             "n_delta_dirs_scanned", F.lit(n_scanned).cast("bigint")
@@ -12646,8 +12647,8 @@ def x167(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT, "
         "n_flagged BIGINT, sum_flag BIGINT",
     ).orderBy("o_orderpriority")
@@ -13764,8 +13765,8 @@ def x177(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         shutil.rmtree(t, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
+    return local_frame(
+        spark, rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
     ).orderBy("o_orderpriority")
 
 
@@ -14369,8 +14370,8 @@ def x184(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
+        local_frame(
+            spark, rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
         )
         .withColumn("props_intact", F.lit(props_intact).cast("bigint"))
         .withColumn("old_name_gone", F.lit(old_gone).cast("bigint"))
@@ -14487,8 +14488,8 @@ def x185(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
+        local_frame(
+            spark, rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
         )
         .withColumn("n_clone_commits", F.lit(n_commits).cast("bigint"))
         .withColumn("src_intact", F.lit(src_intact).cast("bigint"))
@@ -15676,8 +15677,8 @@ def x196(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
+        local_frame(
+            spark, rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
         )
         .withColumn("n_tombstoned", F.lit(n_tomb).cast("bigint"))
         .orderBy("o_orderpriority")
@@ -15877,8 +15878,8 @@ def x198(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sql("DROP TEMPORARY VARIABLE IF EXISTS x198_thr")
         spark.sql("DROP TEMPORARY VARIABLE IF EXISTS x198_view")
         spark.catalog.dropTempView("x198_orders_v")
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "o_orderpriority STRING, n_orders BIGINT, n_above BIGINT, "
         "share_above DOUBLE",
     ).orderBy("o_orderpriority")
@@ -15981,8 +15982,8 @@ def x199(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("q3"),
     ).collect()[0]
-    params = spark.createDataFrame(
-        [(_cmin, _n, int(_q["q1"]), int(_q["q3"]))],
+    params = local_frame(
+        spark, [(_cmin, _n, int(_q["q1"]), int(_q["q3"]))],
         "cmin LONG, n LONG, q1 LONG, q3 LONG",
     ).select(
         "cmin",
@@ -16098,8 +16099,8 @@ def x200(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows,
+    return local_frame(
+        spark, rows,
         "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT, "
         "n_updated BIGINT",
     ).orderBy("o_orderpriority")
@@ -16201,8 +16202,8 @@ def x201(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
+        local_frame(
+            spark, rows, "o_orderpriority STRING, n_orders BIGINT, sum_cents BIGINT"
         )
         .withColumn("n_blocked_writes", F.lit(blocked).cast("bigint"))
         .withColumn(
@@ -16284,8 +16285,8 @@ def x202(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         snap.commit(spark, extra, t, mode="append")                   # v2
         snap.drop_constraint(spark, t, "bal_floor")                   # v3
-        zomb = spark.createDataFrame(
-            [(9999999, "ZOMBIE", -(10**12))], "k bigint, seg string, cents bigint"
+        zomb = local_frame(
+            spark, [(9999999, "ZOMBIE", -(10**12))], "k bigint, seg string, cents bigint"
         )
         snap.commit(spark, zomb, t, mode="append")                    # v4
         hist = snap.history(t)
@@ -16305,8 +16306,8 @@ def x202(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return (
-        spark.createDataFrame(
-            rows, "c_mktsegment STRING, n_rows BIGINT, sum_cents BIGINT"
+        local_frame(
+            spark, rows, "c_mktsegment STRING, n_rows BIGINT, sum_cents BIGINT"
         )
         .withColumn("blocked_adds", F.lit(blocked).cast("bigint"))
         .withColumn("n_meta_ops", F.lit(n_meta).cast("bigint"))
@@ -16415,8 +16416,8 @@ def x203(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root, ignore_errors=True)
     bounded = nonempty >= 4
-    return spark.createDataFrame(
-        [(v, n, bounded) for v, n in got],
+    return local_frame(
+        spark, [(v, n, bounded) for v, n in got],
         "commit_version BIGINT, n_rows BIGINT, bounded_drain BOOLEAN",
     ).orderBy("commit_version")
 
@@ -17724,8 +17725,8 @@ def x217(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return (
-        spark.createDataFrame(
-            rows, "p_brand STRING, n_parts BIGINT, sum_cents BIGINT"
+        local_frame(
+            spark, rows, "p_brand STRING, n_parts BIGINT, sum_cents BIGINT"
         )
         .withColumn("n_dirs_removed", F.lit(len(removed)).cast("bigint"))
         .withColumn(
@@ -17853,8 +17854,8 @@ def x218(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return (
-        spark.createDataFrame(
-            rows, "o_orderpriority STRING, n_rows BIGINT, sum_cents BIGINT"
+        local_frame(
+            spark, rows, "o_orderpriority STRING, n_rows BIGINT, sum_cents BIGINT"
         )
         .withColumn("n_cdc_deletes", F.lit(n_del).cast("bigint"))
         .withColumn("n_cdc_inserts", F.lit(n_ins).cast("bigint"))
@@ -19040,8 +19041,8 @@ def x230(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return (
-        spark.createDataFrame(
-            rows, "pk_digit BIGINT, n_rows BIGINT, sum_qty BIGINT"
+        local_frame(
+            spark, rows, "pk_digit BIGINT, n_rows BIGINT, sum_qty BIGINT"
         )
         .withColumn(
             "buckets_ok", F.lit(int(1 < n_dirs <= 8)).cast("bigint")

@@ -14,8 +14,10 @@ exercised on local[N]:
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
@@ -78,3 +80,43 @@ def apply_engine_conf(spark: SparkSession) -> SparkSession:
     ]:
         spark.conf.set(k, v)
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable, schema: StructType | str
+) -> DataFrame:
+    """Driver-side rows as a frame over a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame`` on a Python list plans a ``LogicalRDD`` over
+    a Python RDD, so every scan of the frame starts a Python worker. Here
+    the rows become an Arrow table typed from ``schema`` instead, which
+    Spark turns into a ``LocalRelation``: the rows live in the plan, are
+    scanned inside the JVM (``LocalTableScanExec``) and are a plan
+    constant to the optimizer. Python workers are left to the kernels.
+
+    Rows are read as ``createDataFrame`` reads them: a dict by field name
+    (missing keys are null), a tuple, list or ``Row`` by position.
+    ``schema`` is a ``StructType`` or a DDL string such as
+    ``"k BIGINT, name STRING"``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.names
+    columns: list[list] = [[] for _ in names]
+    for row in rows:
+        values = [row.get(n) for n in names] if isinstance(row, dict) else row
+        if len(values) != len(names):
+            raise ValueError(
+                f"row has {len(values)} fields, schema has {len(names)}: {row!r}"
+            )
+        for column, value in zip(columns, values):
+            column.append(value)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)

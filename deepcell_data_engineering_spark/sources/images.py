@@ -11,16 +11,26 @@ compartment names become data columns. Before cropping, crop = 0
 Scale posture: Parquet at rest, partitioned by fov (and any ontology
 levels above it); payloads are zstd-compressed binary; all per-image
 compute is Arrow-batched pandas UDFs over mapInPandas/applyInPandas.
+
+Python workers run only those pixel kernels. Rows built on the driver
+(``images_df``, the slice dims) become Arrow ``LocalRelation``s
+through ``session.local_frame`` and are scanned inside the JVM; guard and
+extent probes are one aggregate action (``probe_images``); and
+``read_npz_units`` lists a ``dir/*.npz`` glob as one directory, so the
+listing runs on the driver with no Spark job.
 """
 
 from __future__ import annotations
 
+import re
+from dataclasses import dataclass
 from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -38,6 +48,7 @@ from deepcell_data_engineering_spark.sources.codecs import (
     encode_x,
     encode_y,
 )
+from deepcell_data_engineering_spark.session import local_frame
 
 IMAGES_SCHEMA = StructType(
     [
@@ -55,6 +66,9 @@ IMAGES_SCHEMA = StructType(
 )
 
 IMAGE_KEY = ["fov", "stack", "crop", "slice"]
+
+# Hadoop glob metacharacters (``GlobPattern``)
+_GLOB_CHARS = re.compile(r"[*?\[{\\]")
 
 
 def rows_from_arrays(
@@ -95,7 +109,60 @@ def rows_from_arrays(
 
 
 def images_df(spark: SparkSession, rows: Iterable[dict]) -> DataFrame:
-    return spark.createDataFrame(list(rows), schema=IMAGES_SCHEMA)
+    return local_frame(spark, rows, IMAGES_SCHEMA)
+
+
+@dataclass
+class ImageProbe:
+    """What ``probe_images`` learns about an images frame."""
+
+    height: int
+    width: int
+    stack_len: int
+    fov_names: list[str]  # sorted; empty unless validated
+
+
+def probe_images(
+    df: DataFrame, for_crop: bool, for_slice: bool, validate: bool
+) -> ImageProbe:
+    """The frame size (max height and width) and stack extent of ``df``
+    from ONE aggregate action, the probe the crop and slice grids are built
+    from (AQE submits its one shuffle stage as a job of its own).
+
+    With ``validate`` the same job carries the guards, raised here with
+    the operators' messages: ``for_crop`` requires un-cropped rows
+    (crop_utils.py:104-105) that share one (height, width); ``for_slice``
+    requires un-sliced rows (slice_utils.py:86-87). It also lists the
+    sorted fov names for the logs. Min/max pairs stand in for distinct
+    counts, so the aggregate needs no second shuffle; only a failing dims
+    guard runs one more action, to count the distinct dims for its message.
+    """
+    aggs = [F.max("height").alias("h"), F.max("width").alias("w"),
+            F.max("stack").alias("s")]
+    if validate:
+        aggs += [
+            F.min("height").alias("h0"), F.min("width").alias("w0"),
+            F.min("crop").alias("c0"), F.max("crop").alias("c1"),
+            F.min("slice").alias("s0"), F.max("slice").alias("s1"),
+            F.array_sort(F.collect_set("fov")).alias("fovs"),
+        ]
+    r = df.agg(*aggs).collect()[0]
+    if validate:
+        if for_crop and r["c0"] != r["c1"]:
+            raise ValueError("images have already been cropped")
+        if for_slice and r["s0"] != r["s1"]:
+            raise ValueError("images have already been sliced")
+        if for_crop and (r["h"] is None or (r["h0"], r["w0"]) != (r["h"], r["w"])):
+            n = df.select("height", "width").distinct().count()
+            raise ValueError(f"images must share dimensions; found {n} distinct (h, w)")
+    if r["s"] is None:
+        raise ValueError("images frame is empty: nothing to crop or slice")
+    return ImageProbe(
+        height=int(r["h"]),
+        width=int(r["w"]),
+        stack_len=int(r["s"]) + 1,
+        fov_names=list(r["fovs"]) if validate else [],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -210,8 +277,20 @@ def read_npz_units(
 ) -> DataFrame:
     """Source: scan NPZ unit files via Spark's binaryFile source + Arrow
     decode — the S15 load path. File names carry the unit key
-    (``{fov}_crop_{c}_slice_{s}.npz``)."""
-    bin_df = spark.read.format("binaryFile").load(glob_path)
+    (``{fov}_crop_{c}_slice_{s}.npz``).
+
+    A glob whose wildcards are all in its last part (``dir/*.npz``) is
+    read as the directory ``dir`` with that part as ``pathGlobFilter``:
+    one root path is listed on the driver, where a glob that expands past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) files
+    makes Spark run a listing job. Files in subdirectories (the blank
+    units under ``separate/``) stay out, as they do for the glob."""
+    reader = spark.read.format("binaryFile")
+    parent, name = glob_path.rsplit("/", 1) if "/" in glob_path else (".", glob_path)
+    if _GLOB_CHARS.search(name) and not _GLOB_CHARS.search(parent):
+        bin_df = reader.option("pathGlobFilter", name).load(parent or "/")
+    else:
+        bin_df = reader.load(glob_path)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import re

@@ -23,6 +23,8 @@ from urllib.parse import urlencode
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from deepcell_data_engineering_spark.session import local_frame
+
 MANIFEST_COLUMNS = [
     "project_url",
     "filename",
@@ -72,7 +74,7 @@ def create_upload_log(
 ) -> DataFrame:
     """S21/S23: manifest DataFrame with projected job URLs — pure
     column expressions over the filename list."""
-    df = spark.createDataFrame([(f,) for f in filenames], "filename STRING")
+    df = local_frame(spark, [(f,) for f in filenames], "filename STRING")
     flags = urlencode({"pixel_only": pixel_only, "label_only": label_only, "rgb": rgb_mode})
     url = F.concat(
         F.lit("https://caliban.deepcell.org/caliban-input__caliban-output__"),

@@ -269,3 +269,131 @@ def test_crop_slice_validate_false_runs_no_guard_jobs(spark):
     finally:
         df_cls.collect, df_cls.first = orig_collect, orig_first
     assert calls == []
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted by job group. AQE is
+    off meanwhile: it runs each shuffle stage of an action as a job of its
+    own, and the count here is of actions (the aggregate probe is one)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _kernel_images(spark, fovs=("fov1", "fov2"), stacks=4, size=20):
+    """A frame produced by a Python UDF (the adjust kernel), as in the
+    pre-annotation pipeline."""
+    from deepcell_data_engineering_spark.functions.imaging import adjust_images
+
+    rng = np.random.default_rng(0)
+    rows = []
+    for fov in fovs:
+        ys = (rng.random((stacks, size, size)) > 0.7).astype(np.int32)
+        xs = rng.random((stacks, size, size, 1)).astype(np.float32)
+        rows += rows_from_arrays(fov, xs, ys)
+    return adjust_images(images_df(spark, rows), {"gamma_adjust": 1.2})
+
+
+@pytest.mark.parametrize("validate", [False, True])
+def test_crop_and_slice_runs_one_job(spark, validate):
+    """One aggregate probe gives the dims, the stack extent and (with
+    validate) every guard and the fov names; the log matches the
+    separately validated crop and slice logs."""
+    from deepcell_data_engineering_spark.operators.reconstruct import crop_and_slice
+
+    images = _kernel_images(spark)
+    (units, log), n_jobs = _jobs_run(
+        spark,
+        lambda: crop_and_slice(
+            images, crop_size=(8, 8), overlap_frac=0.25, slice_len=3,
+            validate=validate,
+        ),
+    )
+    assert n_jobs == 1
+    _, crop_log = crop_images(images, crop_size=(8, 8), overlap_frac=0.25)
+    _, slice_log = slice_images(images, slice_len=3)
+    crop_log.fov_names = crop_log.fov_names if validate else []
+    assert log.crop == crop_log
+    slice_log.fov_names = []  # only the crop log lists fovs when both run
+    assert log.slice == slice_log
+    assert units.count() == 2 * 4 * crop_log.num_crops
+
+
+def test_crop_images_probe_never_calls_first(spark):
+    """Without dims the unvalidated crop takes its grid from one aggregate
+    job, never from .first() on the kernel's output (which closes the
+    Arrow stream early and throws the Python worker away)."""
+    images = _kernel_images(spark)
+    df_cls = type(images)
+    orig_first, orig_head = df_cls.first, df_cls.head
+
+    def refuse(self, *a, **k):
+        raise AssertionError("probe used first()/head()")
+
+    df_cls.first, df_cls.head = refuse, refuse
+    try:
+        (_, log), n_jobs = _jobs_run(
+            spark, lambda: crop_images(images, crop_size=(8, 8), validate=False)
+        )
+    finally:
+        df_cls.first, df_cls.head = orig_first, orig_head
+    assert n_jobs == 1
+    assert (log.original_height, log.original_width) == (20, 20)
+
+
+def test_guard_errors_from_one_probe(spark):
+    from deepcell_data_engineering_spark.operators.reconstruct import crop_and_slice
+
+    ys = np.zeros((2, 20, 20), dtype=np.int32)
+    images = images_df(spark, rows_from_arrays("fov1", None, ys))
+    cropped, _ = crop_images(images, crop_size=(10, 10))
+    with pytest.raises(ValueError, match="already been cropped"):
+        crop_and_slice(cropped, crop_size=(5, 5), slice_len=1)
+    sliced, _ = slice_images(images, slice_len=1)
+    with pytest.raises(ValueError, match="already been sliced"):
+        crop_and_slice(sliced, slice_len=1)
+    mixed = images.unionByName(
+        images_df(spark, rows_from_arrays("fov2", None, np.zeros((1, 8, 8), np.int32)))
+    )
+    with pytest.raises(ValueError, match="found 2 distinct"):
+        crop_and_slice(mixed, crop_size=(4, 4))
+    with pytest.raises(ValueError, match="found 0 distinct"):
+        crop_images(images.limit(0), crop_size=(4, 4))
+    with pytest.raises(ValueError, match="empty"):
+        crop_and_slice(images.limit(0), crop_size=(4, 4), slice_len=1, validate=False)
+
+
+def test_read_npz_units_lists_without_a_job(spark, tmp_path):
+    """A dir/*.npz glob over 40 files is listed as one directory: no
+    listing job, exactly the glob's files (not the blank units under
+    separate/, not other files); a wildcard in the directory part still
+    reads through the glob."""
+    from deepcell_data_engineering_spark.sources.codecs import encode_npz
+    from deepcell_data_engineering_spark.sources.images import read_npz_units
+
+    units = tmp_path / "units"
+    (units / "separate").mkdir(parents=True)
+    y = np.ones((1, 4, 4, 1), dtype=np.int32)
+    for c in range(40):
+        (units / f"fov1_crop_{c}_slice_0.npz").write_bytes(encode_npz(None, y))
+    (units / "separate" / "fov9_crop_0_slice_0.npz").write_bytes(encode_npz(None, y))
+    (units / "fov8_crop_0_slice_0.txt").write_bytes(b"not an npz")
+
+    df, n_jobs = _jobs_run(spark, lambda: read_npz_units(spark, str(units / "*.npz")))
+    assert n_jobs == 0
+    got = sorted((r["fov"], r["crop"]) for r in df.select("fov", "crop").collect())
+    assert got == sorted(("fov1", c) for c in range(40))
+
+    nested = read_npz_units(spark, str(tmp_path / "uni*" / "fov1_crop_1?_*.npz"))
+    assert sorted(r["crop"] for r in nested.select("crop").collect()) == list(range(10, 20))
